@@ -961,10 +961,14 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
       Arrow pass. Integer sums are order-independent, so the total is
       bit-identical to the former explode+join+groupBy plan while
       shuffling nothing (r6: that plan moved one row per gram, twice).
-    - production path: the same fused Arrow pass also emits the float
-      score (functions/perplexity._ppl_exact_udf); `udf_agrees` pins
-      |udf - exact| <= 1e-6 INSIDE the oracle row, so a tokenizer or
-      closure drift turns the row red.
+    - production path: the same Arrow pass also takes the RAW text and
+      scores it with score_text_fast_fn — the scorer behind the enrich
+      UDF and perplexity_col, with its own Python-side lower/truncate/
+      pad. That float is the independent operand: `udf_agrees` pins
+      |score_text_fast_fn(text) - exact| <= 1e-6 INSIDE the oracle row,
+      where exact comes from the JVM-tokenized fixed-point total, so a
+      tokenizer or closure drift in the production scorer turns the
+      row red.
 
     Reference analog: the n-gram perplexity quality signal in the
     enrich stage, src/pipeline/enricher.rs (perplexity fold) — scoring
@@ -975,15 +979,17 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro, backoff_micro, model = _ppl_micro_model()
     base = _fan_out(_doc(spark, sf_dir).select("doc_id", "text"))
     # pad/lower/truncate JVM-side (unchanged tokenization contract),
-    # then ONE fused Arrow pass computes the exact integer total, the
-    # gram count and the float production score per document — the
-    # former explode -> broadcast join -> groupBy -> join-back plan
-    # shuffled one row per gram (~len(text) rows/doc) twice; this plan
+    # then ONE fused Arrow pass computes the exact integer total and the
+    # gram count from it, and the float production score from the raw
+    # text — the former explode -> broadcast join -> groupBy ->
+    # join-back plan shuffled one row per gram (~len(text) rows/doc)
+    # twice; this plan
     # has ZERO exchanges (guide §2.4). Integer sums are order-
     # independent, so logp_micro_total is bit-identical to the join
     # path's sum of the SAME per-gram integers.
     padded = base.select(
         "doc_id",
+        "text",
         F.concat(
             F.lit("\x02" * (_PPL_ORDER - 1)),
             F.substring(
@@ -995,7 +1001,8 @@ def q_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = padded.select(
         "doc_id",
         ppl_exact_col(
-            F.col("__s"), model, tuple(sorted(micro.items())), backoff_micro
+            F.col("__s"), F.col("text"), model, tuple(sorted(micro.items())),
+            backoff_micro,
         ).alias("__r"),
     )
     exact_ppl = F.exp(

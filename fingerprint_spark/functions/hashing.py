@@ -11,6 +11,13 @@ numpy UDFs over word shingles; the per-doc output is a single int64
 (SimHash) or array<long> signature (MinHash), so the expensive text never
 shuffles — only the compact sketches do. At 100 TB that is the difference
 between shuffling ~100 TB and shuffling ~100 GB.
+
+Every production UDF over word-shingle hashes (simhash64_col,
+minhash_signature_col, sketches_col, jaccard_shingle_hashes_col and the
+enrich UDF's simhash64_batch_py) gets them from ONE batch kernel,
+_batch_shingle_hashes. The per-document _shingle_hashes64 (with
+simhash64_py / minhash_signature_py on top) is its reference: same
+blake2b word hash, same positional combine, kept as the test oracle.
 """
 
 from __future__ import annotations
@@ -25,23 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_FNV_OFFSET = 0xCBF29CE484222325
-_FNV_PRIME = 0x100000001B3
 _MASK64 = 0xFFFFFFFFFFFFFFFF
-
-
-def fnv1a64(data: bytes) -> int:
-    h = _FNV_OFFSET
-    for b in data:
-        h = ((h ^ b) * _FNV_PRIME) & _MASK64
-    return h
-
-
-def _shingles(text: str, k: int) -> list[str]:
-    words = (text or "").lower().split()
-    if len(words) < k:
-        return [" ".join(words)] if words else []
-    return [" ".join(words[i: i + k]) for i in range(len(words) - k + 1)]
 
 
 # distinct odd multipliers for position-dependent shingle combination
@@ -107,6 +98,50 @@ def _shingle_hashes64(text: str, k: int) -> "np.ndarray":
     return out
 
 
+def _batch_shingle_hashes(word_lists, k: int) -> list["np.ndarray"]:
+    """Batch kernel of _shingle_hashes64 — per document, the SAME uint64
+    shingle hashes as the per-document reference (pinned by
+    test_dedup_similarity), from ONE blake2b pass over the batch's
+    unique words (Zipf: uniques ≪ occurrences) and ONE positional
+    combine over the concatenated word hashes. ``levels[m - 1]`` holds
+    the combine of the first m terms at every position: a document of
+    n >= k words takes its n - k + 1 full shingles from the top level,
+    a shorter one its single n-term hash from level n. Shingles that
+    would cross a document boundary are never selected, and a document
+    with zero words gets an empty array (never the next document's
+    first word)."""
+    flat = [w for words in word_lists for w in words]
+    levels: list["np.ndarray"] = []
+    if flat:
+        H = np.concatenate([_word_hashes64(flat), np.zeros(k - 1, np.uint64)])
+        n_flat = len(flat)
+        comb = H[:n_flat] * _COMB[0]
+        levels.append(comb)
+        for i in range(1, k):
+            comb = comb ^ _rotl64(
+                H[i: n_flat + i], (21 * i) % 63 + 1
+            ) * _COMB[i % 3]
+            levels.append(comb)
+    out: list["np.ndarray"] = []
+    off = 0
+    for words in word_lists:
+        n = len(words)
+        if n == 0:
+            out.append(np.empty(0, dtype=np.uint64))
+        elif n < k:
+            out.append(levels[n - 1][off: off + 1])
+        else:
+            out.append(levels[k - 1][off: off + n - k + 1])
+        off += n
+    return out
+
+
+def _doc_words(t) -> list[str]:
+    """The per-document reference's tokenization (_shingle_hashes64):
+    lowercased, split on any whitespace; NULL is a zero-word document."""
+    return (t or "").lower().split()
+
+
 _WS_ASCII = None  # compiled lazily (re import stays function-local)
 
 
@@ -144,69 +179,18 @@ def _jaccard_shingle_udf(k: int):
     consumer only compares shingle sets / counts, and any deterministic
     64-bit hash preserves those up to ~2^-64 collisions (the same
     contract the xxhash64 fold already carried vs the oracle's string
-    shingles). Word hashing batches ALL unique words of an Arrow batch
-    through ONE blake2b pass (Zipf: uniques ≪ occurrences), then the
-    k-wise positional combine and per-doc distinct run in numpy."""
+    shingles). The shingle hashes come from _batch_shingle_hashes over
+    the JVM-split tokens; the per-doc distinct runs in numpy."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
-        docs: list[list[str] | None] = []
-        flat: list[str] = []
-        for t in texts:
+        words = [[] if t is None else _jvm_words(t.lower()) for t in texts]
+        out = []
+        for t, h in zip(texts, _batch_shingle_hashes(words, k)):
             if t is None:
-                docs.append(None)
-                continue
-            words = _jvm_words(t.lower())
-            docs.append(words)
-            flat.extend(words)
-        if flat:
-            uniq, inv = np.unique(
-                np.array(flat, dtype=object), return_inverse=True
-            )
-            blake2b = hashlib.blake2b
-            uh = np.fromiter(
-                (
-                    int.from_bytes(
-                        blake2b(w.encode("utf-8"), digest_size=8).digest(),
-                        "little",
-                    )
-                    for w in uniq
-                ),
-                dtype=np.uint64, count=len(uniq),
-            )
-            hflat = uh[inv]
-        else:
-            hflat = np.empty(0, dtype=np.uint64)
-        # positional combine over the whole batch at once; shingles that
-        # would cross a document boundary are simply never selected
-        # because each doc slices only its own n_words - k + 1 positions
-        n_flat = len(hflat)
-        if n_flat >= k:
-            comb = hflat[: n_flat - k + 1] * _COMB[0]
-            for i in range(1, k):
-                comb = comb ^ _rotl64(
-                    hflat[i: n_flat - k + 1 + i], (21 * i) % 63 + 1
-                ) * _COMB[i % 3]
-        else:
-            comb = np.empty(0, dtype=np.uint64)
-        out: list[list[int] | None] = []
-        off = 0
-        for words in docs:
-            if words is None:
                 out.append([_NULL_SHINGLE])
-                continue
-            n = len(words)
-            if n < k:
-                h = hflat[off: off + 1] * _COMB[0]
-                for i in range(1, n):
-                    h = h ^ _rotl64(
-                        hflat[off + i: off + i + 1], (21 * i) % 63 + 1
-                    ) * _COMB[i % 3]
-                out.append(h.view(np.int64).tolist())
             else:
-                sh = np.unique(comb[off: off + n - k + 1])
-                out.append(sh.view(np.int64).tolist())
-            off += n
+                out.append(np.unique(h).view(np.int64).tolist())
         return pd.Series(out)
 
     return udf
@@ -271,7 +255,7 @@ def minhash_signature_py(text: str, num_hashes: int = 64, k: int = 3) -> list[in
 def _simhash_udf(k: int):
     @F.pandas_udf(T.LongType())
     def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([simhash64_py(t, k) for t in texts], dtype="int64")
+        return pd.Series(simhash64_batch_py(texts, k), dtype="int64")
 
     return udf
 
@@ -280,7 +264,8 @@ def _simhash_udf(k: int):
 def _minhash_udf(num_hashes: int, k: int):
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([minhash_signature_py(t, num_hashes, k) for t in texts])
+        hs = _batch_shingle_hashes([_doc_words(t) for t in texts], k)
+        return pd.Series([_minhash_from_hashes(h, num_hashes) for h in hs])
 
     return udf
 
@@ -294,47 +279,12 @@ def minhash_signature_col(text: Column, num_hashes: int = 64, k: int = 3) -> Col
 
 
 def simhash64_batch_py(texts, k: int = 3) -> list[int]:
-    """Batch twin of simhash64_py — BIT-IDENTICAL outputs (pinned by
-    test_r06_optimizations): one blake2b pass over the unique words of
-    the whole batch (Zipf: uniques ≪ occurrences) instead of per
-    document, then the identical positional combine + bit-majority per
-    doc. Used by the enrich UDF (the flagship chain's per-doc simhash)."""
-    docs: list[list[str] | None] = []
-    flat: list[str] = []
-    for t in texts:
-        words = (t or "").lower().split()
-        docs.append(words)
-        flat.extend(words)
-    if flat:
-        hflat = _word_hashes64(flat)
-    else:
-        hflat = np.empty(0, dtype=np.uint64)
-    n_flat = len(hflat)
-    if n_flat >= k:
-        comb = hflat[: n_flat - k + 1] * _COMB[0]
-        for i in range(1, k):
-            comb = comb ^ _rotl64(
-                hflat[i: n_flat - k + 1 + i], (21 * i) % 63 + 1
-            ) * _COMB[i % 3]
-    else:
-        comb = np.empty(0, dtype=np.uint64)
-    out: list[int] = []
-    off = 0
-    for words in docs:
-        n = len(words)
-        if n == 0:
-            out.append(0)
-        elif n < k:
-            h = hflat[off: off + 1] * _COMB[0]
-            for i in range(1, n):
-                h = h ^ _rotl64(
-                    hflat[off + i: off + i + 1], (21 * i) % 63 + 1
-                ) * _COMB[i % 3]
-            out.append(_simhash_from_hashes(h))
-        else:
-            out.append(_simhash_from_hashes(comb[off: off + n - k + 1]))
-        off += n
-    return out
+    """simhash64_py over a batch of texts — BIT-IDENTICAL per document
+    (pinned by test_r06_optimizations), with the shingle hashes from the
+    one batch kernel. Used by the enrich UDF (the flagship chain's
+    per-doc simhash) and by simhash64_col."""
+    hs = _batch_shingle_hashes([_doc_words(t) for t in texts], k)
+    return [_simhash_from_hashes(h) for h in hs]
 
 
 def _simhash_from_hashes(h: "np.ndarray") -> int:
@@ -359,7 +309,7 @@ def _minhash_from_hashes(h: "np.ndarray", num_hashes: int) -> list[int]:
 
 @lru_cache(maxsize=2)
 def _sketches_udf(num_hashes: int, k: int):
-    """Fused simhash + minhash: ONE shingle-hash pass per doc (separate
+    """Fused simhash + minhash: ONE batch shingle-hash pass (separate
     UDF columns each recompute the shingles)."""
 
     @F.pandas_udf(
@@ -371,12 +321,13 @@ def _sketches_udf(num_hashes: int, k: int):
         )
     )
     def udf(texts: pd.Series) -> pd.DataFrame:
-        sims, sigs = [], []
-        for t in texts:
-            h = _shingle_hashes64(t or "", k)
-            sims.append(_simhash_from_hashes(h))
-            sigs.append(_minhash_from_hashes(h, num_hashes))
-        return pd.DataFrame({"simhash": sims, "minhash": sigs})
+        hs = _batch_shingle_hashes([_doc_words(t) for t in texts], k)
+        return pd.DataFrame(
+            {
+                "simhash": [_simhash_from_hashes(h) for h in hs],
+                "minhash": [_minhash_from_hashes(h, num_hashes) for h in hs],
+            }
+        )
 
     return udf
 

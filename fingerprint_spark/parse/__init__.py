@@ -113,10 +113,11 @@ def _enrich_udf(model, simhash_k: int):
     from ..functions.hashing import simhash64_batch_py
     from ..functions.perplexity import score_text_fast_fn
 
-    # bit-identical fast twins (r6): the LUT+cumsum ppl scorer and the
-    # batch-word-hashed simhash produce the same floats/ints as
-    # score_text/simhash64_py (pinned by test_r06_optimizations) at
-    # ~3x the per-doc Python speed
+    # the one production kernel per signal: score_text_fast_fn (LUT +
+    # cumsum) and simhash64_batch_py (over the batch shingle-hash
+    # kernel) produce the same floats/ints as their per-document
+    # references score_text / simhash64_py (pinned by
+    # test_r06_optimizations)
     score = score_text_fast_fn(model)
 
     @F.pandas_udf(enrich_type())

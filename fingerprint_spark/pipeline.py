@@ -14,10 +14,8 @@ Execution shape (the 100 TB design):
   narrow transformations, so the plan is scan -> project -> write with
   ZERO shuffles. Throughput scales linearly with executors because no
   stage exchanges data. Opting into a TRAINED language model
-  (langid_model + the default 'arrow' kernel) adds a second
-  ArrowEvalPython stage — still narrow, still zero shuffles; the
-  'column' kernel keeps the single-UDF shape at a measured 46x
-  inference cost.
+  (langid_model) adds a second ArrowEvalPython stage — still narrow,
+  still zero shuffles.
 - Template rules compile at the driver and ride the Catalyst plan as
   literals (broadcast versioned lookup structures). Re-validation against
   a new template version is an incremental pass over the same parsed
@@ -122,17 +120,14 @@ def _langid_stage(
     df: DataFrame,
     text_col: str,
     langid_model: dict | None,
-    langid_kernel: str,
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
     """THE language-ID stage dispatch, shared by the html chain
     (quality_filter) and the text chain (quality_filter_text): emits
     lang_detected + lang_score columns from either the marker-word
     Column scorer (default) or the trained softmax (langid_model
-    supplied; lang_score = softmax probability). 'arrow' is the
-    measured corpus kernel (46x the Column fold); 'column' is the
-    zero-Python parity anchor; anything else raises — a typo would
-    otherwise silently pick the slow path.
+    supplied; lang_score = softmax probability, scored by the Arrow
+    kernel langid_classify_arrow).
 
     langid_threshold is the trained tier's UNKNOWN-language gate (the
     marker tier's MIN_SCORE analog; CCNet gates fastText lid at prob
@@ -148,21 +143,11 @@ def _langid_stage(
             .withColumn("lang_score", F.col("_lid.score"))
             .drop("_lid")
         )
-    from .operators.langid_classifier import (
-        langid_classify,
-        langid_classify_arrow,
-    )
+    from .operators.langid_classifier import langid_classify_arrow
 
-    if langid_kernel == "arrow":
-        classify = langid_classify_arrow
-    elif langid_kernel == "column":
-        classify = langid_classify
-    else:
-        raise ValueError(
-            f"unknown langid_kernel: {langid_kernel!r} "
-            "(expected 'arrow' or 'column')"
-        )
-    df = classify(df, langid_model, text_col=text_col, out_col="_lid")
+    df = langid_classify_arrow(
+        df, langid_model, text_col=text_col, out_col="_lid"
+    )
     return (
         df.withColumn(
             "lang_detected",
@@ -184,7 +169,6 @@ def quality_filter(
     ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
     html_col: str = "html",
     langid_model: dict | None = None,
-    langid_kernel: str = "arrow",
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
     """Full chain over the input_hint table (url, warc_ts, html, text, lang).
@@ -196,8 +180,7 @@ def quality_filter(
     ``langid_model`` swaps stage 2's marker-word scorer for the
     TRAINED fastText-shaped softmax (the curate --langid-model
     semantics, now first-class in the flagship chain); lang_score then
-    carries the softmax probability. ``langid_kernel`` as in
-    quality_filter_text ('arrow' default / 'column').
+    carries the softmax probability.
     """
     if rules is None:
         rules = builtin_rules()
@@ -231,10 +214,7 @@ def quality_filter(
     # the trained softmax when a model is supplied (same dispatch as
     # quality_filter_text; the verdict fold below reads the shared
     # lang struct either way)
-    df = _langid_stage(
-        df, "extracted_text", langid_model, langid_kernel,
-        langid_threshold,
-    )
+    df = _langid_stage(df, "extracted_text", langid_model, langid_threshold)
 
     # stage 3: perplexity — already computed in the enrich pass (stage 0)
 
@@ -295,7 +275,6 @@ def quality_filter_text(
     with_ppl: bool = False,
     ppl_model: NGramModel | None = None,
     langid_model: dict | None = None,
-    langid_kernel: str = "arrow",
     langid_threshold: float = DEFAULT_LANGID_THRESHOLD,
 ) -> DataFrame:
     """Text-only variant (no html parse): langid -> heuristics -> scrub.
@@ -307,20 +286,11 @@ def quality_filter_text(
     fastText-shaped softmax (operators/langid_classifier, the
     train-langid CLI output) — zero-shuffle either way; lang_score then
     carries the softmax probability of the predicted class rather than
-    the marker-token fraction. ``langid_kernel`` picks the trained
-    scorer's implementation: 'arrow' (default — the measured corpus
-    path, 60.6k vs the fold's 1.3k docs/s at dim=2048/L=4; one
-    ArrowEvalPython stage) or 'column' (pure Columns, zero Python —
-    the parity anchor; plan embeds the dim*L weight literal).
-    Kernel parity: probabilities agree to 1e-9 (pinned by
-    test_langid_classifier); an EXACT margin tie between two classes
-    could in principle resolve differently across kernels (float
-    sum-order ulp) — the fixed-point micro kernels are the bit-exact
-    contract where that matters (the oracle row).
+    the marker-token fraction. The trained scorer is the Arrow kernel
+    langid_classify_arrow (one ArrowEvalPython stage).
     """
     text = F.col(text_col)
-    df = _langid_stage(df, text_col, langid_model, langid_kernel,
-                       langid_threshold)
+    df = _langid_stage(df, text_col, langid_model, langid_threshold)
     df = df.withColumn("stats", text_stats(text))
     df = df.withColumn("flags", gopher_quality_flags(F.col("stats")))
     df = df.withColumn("scrub", scrub_counts(text))

@@ -191,25 +191,53 @@ def test_kmeans_refined_ivf_improves_recall(spark, emb):
 
 
 def test_fused_sketches_match_individual_udfs(spark):
-    """sketches_col (one shingle pass) must equal the standalone simhash
-    and minhash columns value-for-value."""
+    """sketches_col, simhash64_col and minhash_signature_col all run the
+    one batch shingle-hash kernel; each must equal the per-document
+    references simhash64_py / minhash_signature_py row by row, and the
+    fused struct must equal the standalone columns. The zero-word rows
+    sit between non-empty ones in ONE Arrow batch (coalesce(1)), so a
+    kernel that let an empty document pick up its neighbour's first
+    word turns this red."""
     from fingerprint_spark.functions.hashing import (
         minhash_signature_col,
+        minhash_signature_py,
         simhash64_col,
+        simhash64_py,
         sketches_col,
     )
 
+    texts = [
+        BASE, NEAR, FAR,
+        None,                                   # NULL
+        "",                                     # empty
+        "one",                                  # one word (< k)
+        "one two",                              # two words (< k)
+        "alpha beta gamma delta",
+        "   ",                                  # zero words, mid-batch
+        "epsilon zeta eta theta",
+        "nbsp\u00a0separated\u00a0words here",  # NBSP splits in Python
+        "tab\tseparated\twords\tand more",
+        "café naïve résumé İSTANBUL GROẞE oﬃce",  # non-ASCII
+        "a b a b a b a b a b",                  # repeated shingles
+    ]
     df = spark.createDataFrame(
-        [(BASE,), (NEAR,), (FAR,), ("",), ("one two",)], ["text"]
-    )
+        list(enumerate(texts)), "i long, text string"
+    ).coalesce(1)
     out = df.select(
+        "i",
         sketches_col(F.col("text"), num_hashes=8).alias("sk"),
         simhash64_col(F.col("text")).alias("sh"),
         minhash_signature_col(F.col("text"), num_hashes=8).alias("mh"),
     ).collect()
+    assert len(out) == len(texts)
     for r in out:
-        assert r["sk"]["simhash"] == r["sh"]
-        assert list(r["sk"]["minhash"]) == list(r["mh"])
+        t = texts[r["i"]]
+        want_sh = simhash64_py(t)
+        want_mh = minhash_signature_py(t, num_hashes=8)
+        assert r["sh"] == want_sh, (r["i"], t)
+        assert list(r["mh"]) == want_mh, (r["i"], t)
+        assert r["sk"]["simhash"] == want_sh, (r["i"], t)
+        assert list(r["sk"]["minhash"]) == want_mh, (r["i"], t)
 
 
 def test_winnow_fingerprints_detect_containment(spark, docs):

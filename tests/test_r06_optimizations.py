@@ -5,12 +5,18 @@ operator's internals gets a focused equivalence test here.
    must reproduce the JVM transform(xxhash64(slice)) fold's COUNT
    semantics — per-doc distinct size and pairwise intersect size — on
    an adversarial corpus (short docs, repeated shingles, duplicate
-   neighbours, NULL text). Hash VALUES differ by design; only counts
+   neighbours, NULL text, non-ASCII case mapping). Hash VALUES differ by design; only counts
    surface in the query.
 2. the fused perplexity UDF (functions/perplexity._ppl_exact_udf) must
    produce the identical integer totals as the former explode ->
-   broadcast join -> groupBy plan, including the non-ASCII fallback.
+   broadcast join -> groupBy plan, including the non-ASCII fallback,
+   and the production scorer (perplexity_col and the UDF's ppl_udf,
+   both score_text_fast_fn over the raw text) must agree with the
+   exact fixed-point perplexity.
 """
+
+import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,7 +34,24 @@ ADVERSARIAL_DOCS = [
     (8, "Mixed CASE Words and MORE mixed case words"),
     (9, "spaced    out     tokens here now ok"),  # runs of spaces
     (10, "tab\tsep\ntokens here now ok"),       # \t and \n separators
+    # non-ASCII case mapping: Python str.lower() must tokenize like the
+    # JVM's lower() for the count parity to hold
+    (11, "İSTANBUL İzmir city lights"),         # İ -> i + U+0307
+    (12, "i\u0307stanbul i\u0307zmir city lights"),  # 11's lowercase
+    (13, "STRAẞE GROẞ straße groß"),            # ẞ (U+1E9E) -> ß
+    (14, "oﬃce eﬃcient OFFICE office"),        # ﬃ has no lowercase
 ]
+
+
+def _sf001_documents(sf_dir: str) -> str:
+    """The sf0.01 documents table next to the configured test corpus;
+    skips (with the path) when that scale factor is not generated."""
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(sf_dir)), "sf0.01", "documents.parquet"
+    )
+    if not os.path.exists(path):
+        pytest.skip(f"sf0.01 corpus not present: {path}")
+    return path
 
 
 def _jvm_shingles(col):
@@ -141,7 +164,7 @@ def test_sketch_md5_batch_matches_reference():
         assert mins[i] == ref_min, (i, t)
 
 
-def test_score_text_fast_bit_identical():
+def test_score_text_fast_bit_identical(sf_dir):
     """score_text_fast_fn must return the EXACT floats of score_text —
     numpy cumsum accumulates sequentially, so the adds happen in the
     same order; the non-ASCII path falls back to score_text itself."""
@@ -163,14 +186,14 @@ def test_score_text_fast_bit_identical():
 
     texts += [
         r[0] for r in duckdb.connect().execute(
-            "SELECT text FROM '/root/testdata/sf0.01/documents.parquet'"
+            "SELECT text FROM read_parquet(?)", [_sf001_documents(sf_dir)]
         ).fetchall()
     ]
     for t in texts:
         assert fast(t) == score_text(logp, m.order, m.backoff_logp, t), t
 
 
-def test_simhash_batch_bit_identical():
+def test_simhash_batch_bit_identical(sf_dir):
     """simhash64_batch_py must equal simhash64_py per doc."""
     from fingerprint_spark.functions.hashing import (
         simhash64_batch_py,
@@ -183,8 +206,8 @@ def test_simhash_batch_bit_identical():
         "a b a b a b", "Mixed CASE words", "nbsp separated words",
     ] + [
         r[0] for r in duckdb.connect().execute(
-            "SELECT text FROM '/root/testdata/sf0.01/documents.parquet' "
-            "LIMIT 300"
+            "SELECT text FROM read_parquet(?) LIMIT 300",
+            [_sf001_documents(sf_dir)],
         ).fetchall()
     ]
     got = simhash64_batch_py(texts, 3)
@@ -195,12 +218,21 @@ def test_simhash_batch_bit_identical():
 def test_fused_perplexity_matches_join_plan(spark):
     """_ppl_exact_udf's integer totals must be bit-identical to the
     former explode -> broadcast join -> groupBy formulation, and the
-    non-ASCII fallback must agree with the numpy LUT fast path."""
+    non-ASCII fallback must agree with the numpy LUT fast path. The
+    production scorer — perplexity_col and the UDF's ppl_udf, both
+    score_text_fast_fn over the RAW text with Python-side tokenization
+    — must land within _PPL_UDF_TOL of the exact fixed-point ppl of the
+    JVM-tokenized string on every row."""
     from fingerprint_spark.entry_queries import (
         _PPL_ORDER,
+        _PPL_SCALE,
+        _PPL_UDF_TOL,
         _ppl_micro_model,
     )
-    from fingerprint_spark.functions.perplexity import ppl_exact_col
+    from fingerprint_spark.functions.perplexity import (
+        perplexity_col,
+        ppl_exact_col,
+    )
 
     micro, backoff_micro, model = _ppl_micro_model()
     texts = [
@@ -210,10 +242,15 @@ def test_fused_perplexity_matches_join_plan(spark):
         (3, "zzz unseen grams only qqq"),
         (4, "café naïve résumé — non-ascii fallback"),
         (5, "x" * 5000),  # truncation at 4000 chars
+        (6, "İSTANBUL İzmir"),       # İ lowers to two chars
+        (7, "STRAẞE GROẞ"),          # ẞ (U+1E9E) -> ß
+        (8, "the oﬃce is eﬃcient"),  # ﬃ has no lowercase mapping
+        (9, "İ" * 3000),             # lower() crosses the 4000-char cut
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
     padded = df.select(
         "doc_id",
+        "text",
         F.concat(
             F.lit("\x02" * (_PPL_ORDER - 1)),
             F.substring(
@@ -222,15 +259,17 @@ def test_fused_perplexity_matches_join_plan(spark):
             F.lit("\x03"),
         ).alias("__s"),
     )
+    rows = padded.select(
+        "doc_id",
+        ppl_exact_col(
+            F.col("__s"), F.col("text"), model, tuple(sorted(micro.items())),
+            backoff_micro,
+        ).alias("r"),
+        perplexity_col(F.col("text"), model).alias("ppl_col"),
+    ).collect()
     fused = {
         r["doc_id"]: (r["r"]["logp_micro_total"], r["r"]["n_grams"])
-        for r in padded.select(
-            "doc_id",
-            ppl_exact_col(
-                F.col("__s"), model, tuple(sorted(micro.items())),
-                backoff_micro,
-            ).alias("r"),
-        ).collect()
+        for r in rows
     }
     # reference: the former join plan
     model_df = spark.createDataFrame(
@@ -258,3 +297,8 @@ def test_fused_perplexity_matches_join_plan(spark):
         .collect()
     }
     assert fused == want and len(fused) == len(texts)
+    for r in rows:
+        total, n = fused[r["doc_id"]]
+        exact = math.exp(-(total / float(_PPL_SCALE)) / n)
+        assert abs(r["r"]["ppl_udf"] - exact) <= _PPL_UDF_TOL, r
+        assert abs(r["ppl_col"] - exact) <= _PPL_UDF_TOL, r
